@@ -1301,264 +1301,3 @@ def ivf_sq8_search(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos")
     )
-
-
-# ---- product quantization (IVF-PQ): the compression rung above SQ8 ---------
-
-def _unit(X):
-    import numpy as np
-
-    return X / np.maximum(np.linalg.norm(X, axis=-1, keepdims=True), 1e-300)
-
-
-def pq_train_books(R, m_sub: int, ksub: int, iters: int = 5):
-    """Per-subspace L2 k-means on a residual sample matrix ``R`` (driver
-    numpy; the caller bounds the sample). Deterministic: seeds are the
-    sample's first ``ksub`` rows per subspace, fixed iteration count,
-    empty clusters keep their previous centroid. Returns
-    (m_sub, ksub, dim // m_sub)."""
-    import numpy as np
-
-    dim = R.shape[1]
-    if dim % m_sub != 0:
-        raise ValueError(f"pq: dim {dim} not divisible by m_sub {m_sub}")
-    if ksub > 256:
-        raise ValueError(f"pq: ksub {ksub} exceeds one byte")
-    dsub = dim // m_sub
-    books = np.empty((m_sub, ksub, dsub), dtype=np.float64)
-    for m in range(m_sub):
-        Xm = R[:, m * dsub:(m + 1) * dsub]
-        cents = Xm[: min(ksub, len(Xm))].copy()
-        if len(cents) < ksub:  # tiny sample: pad by repetition (stable)
-            reps = -(-ksub // len(cents))
-            cents = np.tile(cents, (reps, 1))[:ksub]
-        for _ in range(iters):
-            d2 = ((Xm[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(ksub):
-                mask = a == c
-                if mask.any():
-                    cents[c] = Xm[mask].mean(axis=0)
-        books[m] = cents
-    return books
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    cent_ids,
-    cmat,
-    m_sub: int = 8,
-    ksub: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
-):
-    """Train the M per-subspace RESIDUAL codebooks of an IVF-PQ index
-    (FAISS IVFPQ analogue; public algorithm, Jegou et al. 2011): vectors
-    are unit-normalized (the engine's ANN metric is cosine), each sample
-    vector's residual against its nearest coarse centroid is what gets
-    quantized — residuals are far smaller than raw vectors, which is
-    where IVF-PQ's accuracy at 8-16 bytes/vector comes from. Training
-    reads a DETERMINISTIC md5-ordered sample bounded by ``sample_size``
-    (k-means runs on the driver over the sample; the corpus itself is
-    never collected — the same bounded-collect contract as ivf_codebook)."""
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
-        .limit(sample_size)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("pq codebooks: empty corpus")
-    X = _unit(np.array([r["v"] for r in rows], dtype=np.float64))
-    C = _unit(cmat)
-    R = X - C[(X @ C.T).argmax(axis=1)]
-    return pq_train_books(R, m_sub, ksub, iters)
-
-
-def pq_encode_lists(lists: DataFrame, cent_ids, cmat, books) -> DataFrame:
-    """Encode IVF list residents (list_id, neighbor_id, cv) into PQ rows
-    (list_id, neighbor_id, pq_code, rnorm): unit-normalize, subtract the
-    OWN list's coarse centroid, quantize the residual per subspace, and
-    fold the reconstructed norm |centroid + recon(residual)| once per
-    resident (the same per-vector-norm discipline as the sq8 path — never
-    per candidate pair). Codes are small ints here; production packs the
-    m_sub codes into one binary column, which parquet stores
-    byte-per-code either way. Arrow-batched mapInPandas; codebooks +
-    coarse centroids ship in the closure (KBs)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    m_sub, ksub, dsub = books.shape
-    C = _unit(cmat)
-    crow = {int(cid): j for j, cid in enumerate(cent_ids)}
-    out_schema = T.StructType([
-        lists.schema["list_id"],
-        lists.schema["neighbor_id"],
-        T.StructField("pq_code", T.ArrayType(T.IntegerType())),
-        T.StructField("rnorm", T.DoubleType()),
-    ])
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _unit(np.array([np.asarray(x) for x in pdf["cv"]],
-                               dtype=np.float64))
-            li = np.array([crow[int(l)] for l in pdf["list_id"]])
-            R = V - C[li]
-            codes = np.empty((len(V), m_sub), dtype=np.int64)
-            recon = np.empty_like(V)
-            for m in range(m_sub):
-                Rm = R[:, m * dsub:(m + 1) * dsub]
-                d2 = ((Rm[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                a = d2.argmin(axis=1)
-                codes[:, m] = a
-                recon[:, m * dsub:(m + 1) * dsub] = books[m][a]
-            rec = C[li] + recon
-            out = pd.DataFrame({
-                "list_id": pdf["list_id"],
-                "neighbor_id": pdf["neighbor_id"],
-                "pq_code": [c.tolist() for c in codes],
-                "rnorm": np.maximum(np.linalg.norm(rec, axis=1), 1e-300),
-            })
-            yield out
-
-    return lists.mapInPandas(run, out_schema)
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    num_centroids: int = 200,
-    nprobe: int = 28,
-    assign_lists: int = 2,
-    lloyd_iters: int = 1,
-    m_sub: int = 8,
-    ksub: int = 16,
-    pq_iters: int = 5,
-    refine: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse probe + PQ asymmetric-distance scoring (ADC) over
-    RESIDUAL codes: the probed lists hold only (neighbor_id, m_sub small
-    codes, rnorm) — at M=8 on 64-dim floats that is ~8 bytes + a double
-    per resident, ~16-32x below float residents and ~4-8x below SQ8,
-    which is the difference between spilling and staying resident when a
-    100 TB corpus's hot lists land on one executor.
-
-    ADC shape: queries keep full precision; scoring groups candidates by
-    query (applyInPandas — queries are the SMALL side by construction),
-    builds the per-query coarse table (one 200-row GEMV) and the residual
-    lookup table LUT[m][c] = <q_m, book[m][c]> once, after which every
-    candidate costs m_sub table gathers + one add — no per-pair vector
-    math at all: approx dot = <q, c_list> + LUT-sum, approx cosine =
-    that / rnorm (q is unit), rounded half-up like every ANN path here.
-
-    ``refine > 0`` adds the standard exact-refine stage (FAISS
-    IndexRefineFlat): the ADC pass produces a ``refine * k`` shortlist
-    per query, the float vectors of ONLY the shortlist are joined back,
-    and exact cosine re-ranks it. The full-precision corpus is touched
-    for refine*k*|queries| rows total — the compressed scan does the
-    heavy lifting, the refine join is shortlist-sized — which is how PQ
-    keeps near-flat recall on distance-concentrated (near-isotropic)
-    embeddings where raw ADC ordering is noise-limited. Accuracy either
-    way is measured by the recall gate against brute force (the same
-    contract as LSH/IVF/SQ8)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cent_ids, cmat, lists = ivf_build(
-        corpus, num_centroids=num_centroids, assign_lists=assign_lists,
-        lloyd_iters=lloyd_iters, id_col=id_col, vec_col=vec_col,
-    )
-    books = pq_codebooks(
-        corpus, cent_ids, cmat, m_sub=m_sub, ksub=ksub, iters=pq_iters,
-        id_col=id_col, vec_col=vec_col,
-    )
-    lists_pq = pq_encode_lists(lists, cent_ids, cmat, books)
-    probes = _ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "query_id", "qv", nprobe, "list_id", cent_ids, cmat,
-    ).select("query_id", "list_id")
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cand = (
-        lists_pq.join(probes, ["list_id"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(qv, "query_id")
-    )
-    m_sub_, ksub_, dsub_ = books.shape
-    C = _unit(cmat)
-    crow = {int(cid): j for j, cid in enumerate(cent_ids)}
-    out_schema = T.StructType([
-        cand.schema["query_id"],
-        cand.schema["neighbor_id"],
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        q = np.asarray(pdf["qv"].iloc[0], dtype=np.float64)
-        q = q / max(np.linalg.norm(q), 1e-300)
-        lut_c = C @ q  # one GEMV per query, num_centroids rows
-        lut = np.empty((m_sub_, ksub_))
-        for m in range(m_sub_):
-            lut[m] = books[m] @ q[m * dsub_:(m + 1) * dsub_]
-        li = np.array([crow[int(l)] for l in pdf["list_id"]])
-        codes = np.array([np.asarray(c) for c in pdf["pq_code"]], dtype=np.int64)
-        adot = lut_c[li] + lut[np.arange(m_sub_)[None, :], codes].sum(axis=1)
-        cos = _round6_half_up(adot / pdf["rnorm"].to_numpy())
-        out = pd.DataFrame({
-            "query_id": pdf["query_id"],
-            "neighbor_id": pdf["neighbor_id"],
-            "cos": cos,
-        })
-        # soft assignment duplicates a resident across lists: keep each
-        # (query, neighbor) once, at its best-reconstructed score
-        return out.groupby(["query_id", "neighbor_id"], as_index=False).max()
-
-    scored = cand.groupBy("query_id").applyInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    if refine <= 0:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"), "cos")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        shortlist
-        .join(qv.withColumn("qn", _norm(F.col("qv"))), "query_id")
-        .join(
-            corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("nv"),
-                          _norm(F.col(vec_col)).alias("nn")),
-            "neighbor_id",
-        )
-        .withColumn(
-            "cos",
-            F.round(
-                cosine_pre(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn")), 6
-            ),
-        )
-        .select("query_id", "neighbor_id", "cos")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("int").alias("rank"), "cos")
-    )

@@ -61,7 +61,6 @@ class LinkageConfig:
     rows_per_band: int = 4
     match_threshold: float = 0.90  # NIL-NIL string-edge threshold
     resolve_threshold: float = 0.62  # argmax-vs-dictionary acceptance
-    min_token_len: int = 2
     hot_block_threshold: int = 256  # triangle-salt blocks hotter than this
     n_salt: int = 8
     use_idf: bool = False  # corpus-IDF-weighted ngram cosine (thresholds are
@@ -392,17 +391,20 @@ class LinkagePipeline:
 
     @staticmethod
     def _materialize_concurrently(cached: list[DataFrame]) -> None:
-        """Populate several cached DataFrames with concurrent count() jobs
-        (guide §2.6). Job descriptions/groups are thread-local, so each job
-        keeps its own label; exceptions propagate to the caller."""
+        """Populate several checkpointed DataFrames with concurrent count()
+        jobs, one worker thread each (guide §2.6). Job groups and
+        descriptions are thread-local, so the counting callable is wrapped in
+        ``inheritable_thread_target``: every worker job carries the calling
+        thread's group, description and session tags. Exceptions propagate
+        to the caller."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if len(cached) < 2:
-            for df in cached:
-                df.count()
-            return
+        from pyspark import inheritable_thread_target
+
+        session = cached[0].sparkSession
+        count = inheritable_thread_target(session)(lambda df: df.count())
         with ThreadPoolExecutor(max_workers=len(cached)) as pool:
-            list(pool.map(lambda df: df.count(), cached))
+            list(pool.map(count, cached))
 
     # ---- full run ------------------------------------------------------------
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
@@ -410,8 +412,14 @@ class LinkagePipeline:
         (lazy localCheckpoints): surfaces, scored and resolved each feed
         multiple downstream branches (and the CC driver loop runs repeated
         actions) — without materialization Spark would recompute the whole
-        upstream per branch. The lifecycle runner (plans/lifecycle.py)
-        replaces these in-memory snapshots with durable ones."""
+        upstream per branch.
+
+        Caveat: ``localCheckpoint`` blocks live only in executor storage and
+        drop their lineage, so losing an executor (a crash, or a
+        dynamic-allocation scale-in) fails the run instead of recomputing
+        the lost partitions. For runs that must survive that, use
+        ``plans.lifecycle.run_linkage``, which writes durable stage
+        snapshots instead."""
         # Shared intermediates are LAZY localCheckpoints rather than cache():
         # both materialize once per run, but the checkpoint also TRUNCATES
         # lineage (the DataFrame's plan becomes a LogicalRDD). With cache()

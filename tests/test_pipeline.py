@@ -583,3 +583,23 @@ def test_run_output_plans_stay_lineage_truncated(run):
     # re-analyzed subtrees re-reading the transcript source
     assert "LogicalRDD" in plan
     assert "parquet" not in plan.lower()
+
+
+def test_run_jobs_all_carry_the_callers_job_group(spark, tiny):
+    """Every Spark job of run() plus a final count carries the caller's job
+    group, including the jobs of the concurrent branch workers (job groups
+    are thread-local, so an unwrapped worker thread submits ungrouped jobs)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener_bus = sc._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("run-job-group-test", "run() under one job group")
+    try:
+        out = LinkagePipeline(tiny["dictionary"]).run(tiny["transcripts"])
+        out["resolved_mentions"].count()
+    finally:
+        sc._jsc.clearJobGroup()
+    listener_bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("run-job-group-test")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -89,17 +89,6 @@ def test_grid_neardup_complete_on_random_vectors(seed):
 
 # ---- round-3 machinery properties (pure-python/numpy, no Spark session) ----
 
-@given(st.integers(1, 12), st.integers(1, 12), st.integers(0, 2**32 - 1))
-@settings(max_examples=30, deadline=None)
-def test_bmp_roundtrip_any_shape(w, h, seed):
-    """BMP encode/decode round-trips every (h, w) incl. all stride paddings."""
-    from entity_linkings_spark.operators.multimodal import decode_bmp, encode_bmp
-
-    rng = np.random.RandomState(seed)
-    arr = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    assert (decode_bmp(encode_bmp(arr)) == arr).all()
-
-
 @given(st.text(alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FF),
                max_size=40))
 @settings(max_examples=60, deadline=None)

@@ -471,60 +471,3 @@ def test_ivf_codebook_rejects_ids_at_sub_offset(spark):
     )
     with _pytest.raises(ValueError, match="_SUB_OFFSET"):
         SIM.ivf_codebook(bad, 2)
-
-
-def test_ivf_pq_codes_are_compact_and_deterministic(emb):
-    """PQ encoding contract: every resident carries exactly m_sub codes,
-    each < ksub (byte-ranged), plus the folded reconstructed norm; and the
-    whole path (sampled residual training + encode + ADC + refine) is
-    deterministic — two independent builds return identical rows."""
-    from pyspark.sql import functions as F
-
-    cent_ids, cmat, lists = SIM.ivf_build(emb)
-    books = SIM.pq_codebooks(emb, cent_ids, cmat, m_sub=8, ksub=16)
-    assert books.shape == (8, 16, 8)  # 64-dim -> 8 dims per subspace
-    enc = SIM.pq_encode_lists(lists, cent_ids, cmat, books)
-    bad = enc.where(
-        (F.size("pq_code") != 8)
-        | F.exists("pq_code", lambda c: (c < 0) | (c >= 16))
-        | (F.col("rnorm") <= 0)
-    )
-    assert bad.count() == 0
-    assert enc.count() == lists.count()
-    q = emb.limit(8)
-    a = {tuple(r) for r in SIM.ivf_pq_topk(emb, q, k=5, refine=4).collect()}
-    b = {tuple(r) for r in SIM.ivf_pq_topk(emb, q, k=5, refine=4).collect()}
-    assert a == b
-
-
-def test_ivf_pq_adc_and_refine_recall(emb):
-    """Recall gates for the compressed scan. Raw ADC ordering on these
-    near-isotropic synthetic embeddings is noise-limited (distances
-    concentrate, and 8-16 bytes of residual code cannot separate a
-    ~0.02-wide neighbor band) — the measured floor is ~0.5 at m16/k32.
-    With the standard exact-refine stage (shortlist-sized float join,
-    FAISS IndexRefineFlat shape) recall climbs to ~0.88, approaching the
-    coarse-probe ceiling (~0.935 for IVF-flat at the same nprobe) while
-    the probed lists stay ~16-32x smaller than float residents."""
-    q = emb.limit(20)
-    exact = SIM.brute_force_topk(emb, q, k=10)
-    adc = SIM.ivf_pq_topk(emb, q, k=10, m_sub=16, ksub=32)
-    r_adc = SIM.topk_recall(adc, exact).collect()[0]["recall"]
-    assert r_adc >= 0.5, r_adc
-    refined = SIM.ivf_pq_topk(emb, q, k=10, m_sub=16, ksub=32, refine=4)
-    r_ref = SIM.topk_recall(refined, exact).collect()[0]["recall"]
-    assert r_ref >= 0.85, r_ref
-    assert r_ref > r_adc  # the refine stage must actually help
-
-
-def test_ivf_pq_refine_plan_joins_only_shortlist(emb):
-    """The refine join touches the float corpus through a shortlist of
-    refine*k rows per query, not through the probed candidate volume: the
-    plan re-ranks AFTER a rank <= refine*k filter. Assert the filter sits
-    below the corpus join in the optimized plan."""
-    q = emb.limit(4)
-    df = SIM.ivf_pq_topk(emb, q, k=5, refine=3)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "rank" in plan
-    # shortlist filter exists at refine*k
-    assert "15" in plan  # refine * k literal in the rank predicate

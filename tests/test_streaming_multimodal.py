@@ -1,11 +1,11 @@
-"""Streaming incremental mode + multimodal plumbing tests."""
+"""Streaming incremental mode tests: foreachBatch linkage, sessionized and
+windowed queries, and the epoch stores that maintain state across triggers."""
 
 import os
 
 import pyspark.sql.functions as F
 import pytest
 
-from entity_linkings_spark.operators import multimodal as M
 from entity_linkings_spark.plans.pipeline import LinkagePipeline
 from entity_linkings_spark.sources.dictionary import dictionary_token_set
 from entity_linkings_spark.streaming.incremental import (
@@ -126,99 +126,6 @@ def test_windowed_mention_counts(spark, tiny, tmp_path):
     assert df.columns == ["window", "token", "n"]
 
 
-def test_multimodal_features_and_frames(spark):
-    assets = M.synthetic_assets(spark, 30)
-    feats = M.extract_features(assets).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r["features"]) == M.FEATURE_DIM
-        assert all(0.0 <= v <= 1.0 for v in r["features"])
-    # determinism
-    feats2 = M.extract_features(M.synthetic_assets(spark, 30)).collect()
-    assert sorted(map(tuple, feats)) == sorted(map(tuple, feats2))
-    # frame sampling: only videos, duration 4000ms @1000ms -> 4 frames
-    frames = M.sample_frames(assets).groupBy("asset_id").count().collect()
-    assert all(r["count"] == 4 for r in frames)
-    assert len(frames) == 10  # 30 assets, kind cycle -> 10 videos
-
-
-def test_real_decoders_and_stub_boundary(spark):
-    assets = M.synthetic_assets(spark, 12)
-    feats = M.extract_features(assets, real_decode=False)
-    by_kind: dict[str, set] = {}
-    for r in feats.collect():
-        by_kind.setdefault(r["kind"], set()).add(r["decoder"])
-    # stdlib-decodable formats decode FOR REAL (images alternate PPM/BMP,
-    # videos alternate real uncompressed-DIB AVI and the fake fallback)
-    assert by_kind == {"image": {"ppm", "bmp"}, "audio": {"wav"}, "video": {"avi", "fake"}}
-    # with real_decode=True every real container still succeeds...
-    ok = M.extract_features(
-        assets.where("kind != 'video'"), real_decode=True
-    ).collect()
-    assert {r["decoder"] for r in ok} == {"ppm", "bmp", "wav"}
-    # ...and the containerless payloads (the md5-stream videos) fail loudly
-    # at the marked swap-in site
-    with pytest.raises(Exception, match="NotImplementedError|no codec"):
-        M.extract_features(assets.where("kind = 'video'"), real_decode=True).collect()
-
-
-def test_ppm_roundtrip_and_resize(spark):
-    import numpy as np
-
-    arr = np.arange(48 * 64 * 3, dtype=np.uint32).reshape(48, 64, 3) % 256
-    arr = arr.astype(np.uint8)
-    assert (M.decode_ppm(M.encode_ppm(arr)) == arr).all()
-    # raster starting with a whitespace byte must survive (header parse uses
-    # exactly one terminator char)
-    tricky = np.full((2, 2, 3), 0x20, np.uint8)
-    assert (M.decode_ppm(M.encode_ppm(tricky)) == tricky).all()
-    # constant image stays constant under block-mean resize
-    const = np.full((48, 64, 3), 77, np.uint8)
-    assert (M.block_mean_resize(const, 16, 12) == 77).all()
-    assets = M.synthetic_assets(spark, 9)
-    out = M.resize_images(assets, 16, 12).collect()
-    assert len(out) == 3  # only the images
-    formats = set()
-    for r in out:
-        b = bytes(r["payload"])
-        dec = M.decode_ppm(b) if b.startswith(b"P6") else M.decode_bmp(b)
-        formats.add(b[:2])
-        assert dec.shape == (12, 16, 3)
-    assert formats == {b"P6", b"BM"}  # resize re-encodes in the source format
-
-
-def test_bmp_roundtrip_padding_and_topdown():
-    import struct
-
-    import numpy as np
-
-    # w=3 -> stride 12 with 3 pad bytes per row: padding must round-trip
-    arr = (np.arange(5 * 3 * 3, dtype=np.uint32) % 256).astype(np.uint8).reshape(5, 3, 3)
-    assert (M.decode_bmp(M.encode_bmp(arr)) == arr).all()
-    # top-down variant (negative height) decodes to the same image
-    enc = bytearray(M.encode_bmp(arr))
-    h = struct.unpack_from("<i", enc, 22)[0]
-    struct.pack_into("<i", enc, 22, -h)
-    off = struct.unpack_from("<I", enc, 10)[0]
-    stride = (3 * 3 + 3) // 4 * 4
-    rows = [bytes(enc[off + y * stride : off + (y + 1) * stride]) for y in range(h)]
-    enc[off:] = b"".join(reversed(rows))
-    assert (M.decode_bmp(bytes(enc)) == arr).all()
-    # loud failure on unsupported bpp
-    bad = bytearray(M.encode_bmp(arr))
-    struct.pack_into("<H", bad, 28, 8)
-    with pytest.raises(ValueError, match="unsupported BMP"):
-        M.decode_bmp(bytes(bad))
-
-
-def test_wav_roundtrip():
-    import numpy as np
-
-    x = (np.sin(np.arange(4000) / 7.0) * 20000).astype(np.int16)
-    sr, back = M.decode_wav(M.encode_wav(x, 16000))
-    assert sr == 16000 and (back == x).all()
-
-
 def test_epoch_replay_is_idempotent(spark, tiny, tmp_path):
     """A replayed epoch (failure after write, before checkpoint commit) must
     rewrite its partition, not append duplicates — the dynamic-partition-
@@ -239,31 +146,6 @@ def test_epoch_replay_is_idempotent(spark, tiny, tmp_path):
     process(tiny["transcripts"].limit(80), 8)
     assert set(r["epoch_id"] for r in out.select("epoch_id").distinct().collect()) <= {7, 8}
     assert spark.read.parquet(sink).where("epoch_id = 7").count() == n1
-
-
-def test_sniffed_but_undecodable_falls_back_not_crashes(spark):
-    """A payload that LOOKS like a known format but cannot decode (unsupported
-    bpp, truncated raster, a fake payload starting 'BM') must honor the module
-    contract: fake fallback under real_decode=False, loud failure under
-    real_decode=True, silent drop in resize."""
-    import struct
-
-    import numpy as np
-
-    good = M.encode_bmp(np.zeros((2, 2, 3), np.uint8))
-    bad_bpp = bytearray(good)
-    struct.pack_into("<H", bad_bpp, 28, 32)  # 32-bit BMP: unsupported
-    rows = [
-        ("a-bad-bmp", "image", bytes(bad_bpp), None),
-        ("a-trunc-ppm", "image", b"P6\n8 8\n255\nxx", None),
-        ("a-bm-prefix", "video", b"BMnot really a bitmap", None),
-    ]
-    df = spark.createDataFrame(rows, M.ASSET_SCHEMA)
-    feats = {r["asset_id"]: r["decoder"] for r in M.extract_features(df).collect()}
-    assert feats == {"a-bad-bmp": "fake", "a-trunc-ppm": "fake", "a-bm-prefix": "fake"}
-    with pytest.raises(Exception, match="unsupported BMP|ValueError"):
-        M.extract_features(df.where("asset_id = 'a-bad-bmp'"), real_decode=True).collect()
-    assert M.resize_images(df, 4, 4).count() == 0  # dropped, not crashed
 
 
 def test_stream_epoch_matches_batch_pipeline_row_for_row(spark, tiny, tmp_path):
@@ -356,50 +238,6 @@ def test_stream_dedup_exact_bounded_state(spark, tiny, tmp_path):
     )
     assert len(got) == distinct_texts     # one survivor per distinct text
     assert all(r["n"] == 1 for r in got)  # never a duplicate emission
-
-
-def test_avi_roundtrip_and_real_frame_sampling(spark):
-    """The RIFF/AVI container decodes FOR REAL (uncompressed DIB frames):
-    encode->decode is exact, sample_frames extracts the true frames
-    re-encoded as standalone BMPs, and compressed codecs stay behind the
-    loud boundary."""
-    import numpy as np
-
-    frames = [np.full((12, 16, 3), 17 * (k + 1), np.uint8) for k in range(4)]
-    payload = M.encode_avi(frames, fps=1)
-    fps, out = M.decode_avi(payload)
-    assert fps == 1 and len(out) == 4
-    assert all(np.array_equal(a, b) for a, b in zip(frames, out))
-
-    assets = spark.createDataFrame(
-        [("v0", "video", bytearray(payload),
-          {"width": None, "height": None, "sample_rate": None, "duration_ms": 4000})],
-        M.ASSET_SCHEMA,
-    )
-    sampled = M.sample_frames(assets, every_ms=1000).collect()
-    assert len(sampled) == 4
-    for r in sampled:
-        # each sampled frame is a REAL standalone BMP of the source frame
-        arr = M.decode_bmp(bytes(r["frame_payload"]))
-        assert np.array_equal(arr, frames[r["frame_idx"]])
-
-    # features flow through the real path
-    f = M.extract_features(assets, real_decode=True).collect()[0]
-    assert f["decoder"] == "avi" and len(f["features"]) == M.FEATURE_DIM
-
-    # a compressed-codec AVI is refused loudly under real_decode and falls
-    # back to the fake otherwise
-    mjpg = payload.replace(b"DIB ", b"MJPG", 1)
-    bad = spark.createDataFrame(
-        [("v1", "video", bytearray(mjpg),
-          {"width": None, "height": None, "sample_rate": None, "duration_ms": 1000})],
-        M.ASSET_SCHEMA,
-    )
-    assert M.extract_features(bad).collect()[0]["decoder"] == "fake"
-    with pytest.raises(Exception, match="unsupported AVI video codec"):
-        M.extract_features(bad, real_decode=True).collect()
-    # sniffed-but-undecodable also keeps the fake FRAME fallback
-    assert len(M.sample_frames(bad, every_ms=1000).collect()) == 1
 
 
 def test_cross_epoch_cluster_maintenance(spark, tmp_path):
